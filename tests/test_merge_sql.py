@@ -38,6 +38,7 @@ def runner(spark, tmp_path):
     return r, t
 
 
+@pytest.mark.smoke
 def test_reference_upsert_statement_verbatim(spark, runner):
     r, t = runner
     spark.createDataFrame(
@@ -52,6 +53,7 @@ def test_reference_upsert_statement_verbatim(spark, runner):
     assert _state(t) == {1: 10, 2: 99, 3: 30, 4: 40}
 
 
+@pytest.mark.smoke
 def test_reference_delete_statement_verbatim(spark, runner):
     r, t = runner
     spark.createDataFrame([(1, "a", 10)], ROWS).createOrReplaceTempView(
@@ -91,6 +93,7 @@ def test_combined_statement_with_op_condition(spark, runner):
     assert _state(t) == {2: 77, 3: 30, 5: 50}
 
 
+@pytest.mark.smoke
 def test_merge_sql_rejects_out_of_subset(spark, runner):
     r, t = runner
     spark.createDataFrame([(1, "a", 1)], ROWS).createOrReplaceTempView("src")
@@ -215,6 +218,7 @@ def test_by_source_delete_alone(spark, runner):
     assert _state(t) == {1: 10, 3: 30}  # 2 pruned; 1,3 NOT updated
 
 
+@pytest.mark.smoke
 def test_by_source_guards(spark, runner):
     r, t = runner
     spark.createDataFrame([(1, "a", 1)], ROWS).createOrReplaceTempView("gsrc")
@@ -235,6 +239,7 @@ def test_by_source_guards(spark, runner):
 # -- row-level DML statements (DELETE FROM / UPDATE / INSERT INTO) -------
 
 
+@pytest.mark.smoke
 def test_delete_from_where(spark, runner):
     r, t = runner
     r.sql("DELETE FROM demo.cdc_db.retail_trans WHERE amount >= 20")
@@ -250,6 +255,7 @@ def test_delete_from_all_rows_and_alias(spark, runner):
     assert _state(t) == {}
 
 
+@pytest.mark.smoke
 def test_update_set_where(spark, runner):
     r, t = runner
     r.sql("UPDATE demo.cdc_db.retail_trans "
@@ -271,6 +277,7 @@ def test_update_multi_set_uses_preimage(spark, runner):
     assert row[1]["customer_id"] == "a10"  # pre-update amount, not 11
 
 
+@pytest.mark.smoke
 def test_update_guards(spark, runner):
     r, _ = runner
     with pytest.raises(MergeSqlError, match="key column"):
@@ -724,6 +731,7 @@ def test_dml_on_mor_cdc_table(spark, tmp_path):
     assert _state(t) == {1: 77}
 
 
+@pytest.mark.smoke
 def test_alias_never_rewrites_string_literals(spark, tmp_path):
     """Alias stripping is quote-aware: alias ``t`` must not corrupt
     'http://t.co' into 'http://co' (advisor finding r4)."""
@@ -750,6 +758,135 @@ def test_alias_never_rewrites_string_literals(spark, tmp_path):
     assert _state(t) == {2: 20, 3: 30}
 
 
+
+@pytest.mark.smoke
+def test_double_quoted_literal_with_alias_dot_is_data(spark, tmp_path):
+    """A double-quoted literal that contains ``<alias>.`` is data in
+    DELETE / UPDATE conditions and SET values and in MERGE clause
+    conditions: none may lose the ``t.`` or trip the target-alias
+    guard."""
+    t = ParquetLakeTable(spark, str(tmp_path / "dq"), key_cols=["trans_id"],
+                         partition_col=None)
+    t.create(spark.createDataFrame(
+        [(1, "t.co", 10), (2, "x", 20), (3, "y", 30)], ROWS))
+    r = MergeSqlRunner(spark)
+    r.register("db.t", t)
+    r.sql('DELETE FROM db.t AS t WHERE t.customer_id = "t.co"')
+    assert _state(t) == {2: 20, 3: 30}
+    r.sql('UPDATE db.t t SET customer_id = "see t.co" WHERE t.trans_id = 2')
+    assert {x["trans_id"]: x["customer_id"]
+            for x in t.read_data().collect()}[2] == "see t.co"
+    spark.createDataFrame([(3, "t.co", 33)], ROWS).createOrReplaceTempView(
+        "dq_src")
+    r.sql('MERGE INTO db.t t USING dq_src s ON s.trans_id = t.trans_id '
+          'WHEN MATCHED AND s.customer_id = "t.co" THEN UPDATE SET *')
+    assert _state(t) == {2: 20, 3: 33}
+
+
+@pytest.mark.smoke
+def test_update_set_double_quoted_comma(spark, runner):
+    """A comma inside a double-quoted SET literal is data, not an
+    assignment separator."""
+    r, t = runner
+    r.sql('UPDATE demo.cdc_db.retail_trans SET customer_id = "x, y" '
+          'WHERE trans_id = 2')
+    assert {x["trans_id"]: x["customer_id"]
+            for x in t.read_data().collect()} == {1: "a", 2: "x, y", 3: "c"}
+
+
+
+@pytest.mark.smoke
+def test_table_form_reads_registered_table(spark, runner):
+    """``TABLE <name>`` is a relation like ``FROM <name>`` and pins the
+    registered table, in a query and as an INSERT source; it takes no
+    alias, so none is added."""
+    r, t = runner
+    got = r.query("SELECT COUNT(*) AS n FROM (TABLE demo.cdc_db.retail_trans)")
+    assert got.collect()[0]["n"] == 3
+    spark.createDataFrame([(7, "g", 70)], ROWS).createOrReplaceTempView(
+        "tbl_src")
+    r.sql("INSERT INTO demo.cdc_db.retail_trans TABLE tbl_src")
+    assert _state(t) == {1: 10, 2: 20, 3: 30, 7: 70}
+
+
+
+@pytest.mark.smoke
+def test_merge_conditions_differing_only_in_literal_case(spark, runner):
+    """UPDATE and INSERT conditions that differ only in a literal's case
+    are different conditions: each source row routes by its own."""
+    r, t = runner
+    spark.createDataFrame(
+        [(2, "A", 99), (3, "a", 33), (4, "a", 40), (5, "A", 50)], ROWS
+    ).createOrReplaceTempView("case_src")
+    r.sql("""MERGE INTO demo.cdc_db.retail_trans t
+        USING case_src s ON s.trans_id = t.trans_id
+        WHEN MATCHED AND s.customer_id = 'A' THEN UPDATE SET *
+        WHEN NOT MATCHED AND s.customer_id = 'a' THEN INSERT *""")
+    assert _state(t) == {1: 10, 2: 99, 3: 30, 4: 40}
+
+
+@pytest.mark.smoke
+def test_boolean_literals_in_dml(spark, tmp_path):
+    """``true``/``false`` as SET values and as WHERE / WHEN conditions
+    mean what they say (Spark's parser shares one node per boolean
+    literal, so its position in the statement is not recorded)."""
+    t = ParquetLakeTable(spark, str(tmp_path / "b"), key_cols=["trans_id"],
+                         partition_col=None)
+    t.create(spark.createDataFrame(
+        [(1, "a", 10, True), (2, "b", 20, True), (3, "c", 30, False)],
+        ROWS + ", flag boolean"))
+    r = MergeSqlRunner(spark)
+    r.register("db.b", t)
+
+    def flags():
+        return {x["trans_id"]: (x["amount"], x["flag"])
+                for x in t.read_data().collect()}
+
+    r.sql("UPDATE db.b SET flag = false WHERE trans_id = 1")
+    assert flags() == {1: (10, False), 2: (20, True), 3: (30, False)}
+    r.sql("UPDATE db.b SET amount = amount + 1, flag = TRUE WHERE true")
+    assert flags() == {1: (11, True), 2: (21, True), 3: (31, True)}
+    r.sql("DELETE FROM db.b WHERE false")
+    assert flags() == {1: (11, True), 2: (21, True), 3: (31, True)}
+    spark.createDataFrame([(2, "b", 99, False), (4, "d", 40, True)],
+                          ROWS + ", flag boolean").createOrReplaceTempView(
+        "bool_src")
+    r.sql("MERGE INTO db.b t USING bool_src s ON s.trans_id = t.trans_id "
+          "WHEN MATCHED AND true THEN UPDATE SET * "
+          "WHEN NOT MATCHED AND false THEN INSERT *")
+    assert flags() == {1: (11, True), 2: (99, False), 3: (31, True)}
+    r.sql("DELETE FROM db.b t WHERE t.flag = false")
+    assert flags() == {1: (11, True), 3: (31, True)}
+
+
+@pytest.mark.smoke
+def test_merge_moved_clause_ending_in_line_comment(spark, runner):
+    """WHEN clauses out of Spark's order are regrouped; a clause that
+    ends in a ``--`` comment must not swallow the clauses put after it."""
+    r, t = runner
+    spark.createDataFrame(
+        [(1, "a", 0, "d"), (2, "b", 77, "u"), (5, "e", 50, "i")],
+        ROWS + ", op string",
+    ).createOrReplaceTempView("commented_src")
+    r.sql("MERGE INTO demo.cdc_db.retail_trans t USING commented_src s "
+          "ON s.trans_id = t.trans_id\n"
+          "WHEN NOT MATCHED THEN INSERT *\n"
+          "WHEN MATCHED AND s.op = 'd' THEN DELETE -- tombstones\n"
+          "WHEN MATCHED THEN UPDATE SET *")
+    assert _state(t) == {2: 77, 3: 30, 5: 50}
+
+
+@pytest.mark.smoke
+def test_line_comment_naming_table_keeps_implicit_alias(spark, runner):
+    """A comment that ends in the word TABLE is not the ``TABLE <name>``
+    form: the reference still gets its implicit alias."""
+    r, _ = runner
+    got = r.query("SELECT retail_trans.amount FROM -- TABLE\n"
+                  "demo.cdc_db.retail_trans WHERE retail_trans.trans_id > 1")
+    assert sorted(x["amount"] for x in got.collect()) == [20, 30]
+
+
+@pytest.mark.soak
 def test_sql_frontend_random_soak(spark, tmp_path):
     """Seeded randomized soak over the whole DML statement family
     (judge item r5): ≥200 generated statements — MERGE clause subsets
@@ -1194,6 +1331,7 @@ def _amounts(df):
     return {r["trans_id"]: r["amount"] for r in df.collect()}
 
 
+@pytest.mark.smoke
 def test_select_time_travel_version_and_timestamp(spark, runner):
     """`[FOR] VERSION AS OF` / `[FOR] TIMESTAMP AS OF` resolve through
     the manifest: Athena runs exactly this syntax against the
@@ -1236,6 +1374,7 @@ def test_select_time_travel_version_and_timestamp(spark, runner):
     )) == {2: 99, 3: 30}
 
 
+@pytest.mark.smoke
 def test_select_time_travel_tag_branch_and_composition(spark, runner):
     r, t = runner
     t.tag("rel1")
@@ -1266,6 +1405,7 @@ def test_select_time_travel_tag_branch_and_composition(spark, runner):
     assert got == {1: 0, 2: 0, 3: 970}
 
 
+@pytest.mark.smoke
 def test_select_time_travel_sees_as_of_schema(spark, runner):
     """A pinned read surfaces the schema AS OF that version — a later
     rename must not leak backwards (Iceberg field-id semantics)."""
@@ -1280,6 +1420,7 @@ def test_select_time_travel_sees_as_of_schema(spark, runner):
     assert "amt" in t.read_data().columns
 
 
+@pytest.mark.smoke
 def test_select_time_travel_guards(spark, runner):
     r, t = runner
     first_ms = t.history()[0]["committed_at_ms"]
@@ -1453,6 +1594,7 @@ def test_insert_overwrite_partition_scope_is_typed(spark, tmp_path):
     assert got == {1: (1, 11), 9: (1, 90), 3: (2, 30)}, got
 
 
+@pytest.mark.smoke
 def test_select_time_travel_view_cache_is_bounded(spark, runner):
     """reviewer finding (r10): pinned __lake_asof_* temp views are an
     LRU capped per runner — a long-lived runner pinning ever-new
@@ -1491,6 +1633,7 @@ def test_insert_select_can_time_travel(spark, runner):
     assert _state(t) == {1: 10, 2: 20, 3: 30}
 
 
+@pytest.mark.smoke
 def test_merge_using_subquery_source(spark, runner):
     """MERGE USING (SELECT ...) s — the subquery evaluates through
     query(), so it composes with time travel: restoring a prior
@@ -1533,6 +1676,7 @@ def test_merge_using_subquery_source(spark, runner):
               "WHEN MATCHED THEN DELETE")
 
 
+@pytest.mark.smoke
 def test_select_metadata_tables(spark, runner):
     """Iceberg metadata-table addressing in SQL: t.history /
     t.snapshots / t.refs / t.files / t.partitions, the last two with
@@ -1572,6 +1716,7 @@ def test_select_metadata_tables(spark, runner):
     assert not isinstance(ei.value, MergeSqlError)
 
 
+@pytest.mark.smoke
 def test_query_rewrites_are_literal_and_context_safe(spark, runner):
     """reviewer findings (r10, second wave): the textual rewrites scan
     a literal-masked twin of the statement, so string literals that
@@ -1622,6 +1767,7 @@ def test_insert_overwrite_rejects_uncastable_partition_literal(
     assert got == {1: 10, 2: 20}  # NULL partition untouched
 
 
+@pytest.mark.smoke
 def test_merge_subquery_double_quoted_paren_and_view_reuse(spark, runner):
     r, t = runner
     spark.createDataFrame([(5, ")", 50)], ROWS).createOrReplaceTempView(
@@ -1640,6 +1786,7 @@ def test_merge_subquery_double_quoted_paren_and_view_reuse(spark, runner):
         [v for v in views if v.endswith(views[0].split("_")[-1])]) == 1
 
 
+@pytest.mark.smoke
 def test_metadata_tables_quoted_ref_pin(spark, runner):
     r, t = runner
     t.tag("m1")
@@ -1655,6 +1802,7 @@ def test_metadata_tables_quoted_ref_pin(spark, runner):
 # -- r11: CTE precedence, FROM-list commas, CTAS, SHOW/DESCRIBE ----------
 
 
+@pytest.mark.smoke
 def test_cte_shadows_registered_table(spark, runner):
     """r10 judge finding (confirmed repro): a WITH-clause alias that
     collides with a registered single-part name must resolve to the
@@ -1677,6 +1825,7 @@ def test_cte_shadows_registered_table(spark, runner):
     assert got[0]["s"] == 3
 
 
+@pytest.mark.smoke
 def test_cte_two_part_registered_name_still_pins(spark, runner):
     """A CTE named after a TWO-part registered name's last segment
     exempts only the single-part spelling: the qualified reference
@@ -1690,6 +1839,7 @@ def test_cte_two_part_registered_name_still_pins(spark, runner):
     assert (got[0]["mx"], got[0]["n"]) == (99, 3)
 
 
+@pytest.mark.smoke
 def test_cte_shadow_applies_to_asof_and_meta_rewrites(spark, runner):
     """The exemption covers the time-travel and metadata rewrites too:
     a CTE-named ident with VERSION AS OF / .history is left for Spark,
@@ -1706,6 +1856,7 @@ def test_cte_shadow_applies_to_asof_and_meta_rewrites(spark, runner):
     assert not isinstance(ei.value, MergeSqlError)
 
 
+@pytest.mark.smoke
 def test_from_list_comma_refs_rewrite(spark, runner):
     """r11 judge item #5: metadata and plain refs in legacy
     comma-separated FROM lists rewrite correctly."""
@@ -1727,6 +1878,7 @@ def test_from_list_comma_refs_rewrite(spark, runner):
     assert n_hist == len(t.history())
 
 
+@pytest.mark.smoke
 def test_non_from_commas_never_rewrite(spark, runner):
     """A SELECT-list or argument comma must never introduce a rewrite:
     a qualified column named like a registered table or a metadata
@@ -1752,6 +1904,7 @@ def test_non_from_commas_never_rewrite(spark, runner):
     assert len(got) == 3
 
 
+@pytest.mark.smoke
 def test_timestamp_as_of_bare_seconds(spark, runner):
     """r10 advisor: a bare integer small enough to be epoch seconds is
     read as seconds (Iceberg-Spark's CAST reading); >= 1e12 stays
@@ -1765,6 +1918,7 @@ def test_timestamp_as_of_bare_seconds(spark, runner):
         r.query(f"{sel} TIMESTAMP AS OF {ms // 1000 - 60}")
 
 
+@pytest.mark.smoke
 def test_keyword_named_alias_after_time_travel(spark, runner):
     """r10 advisor: 'window'/'sort'/'group' are legal bare aliases in
     Spark; only a matching grammatical continuation makes them
@@ -1947,6 +2101,7 @@ def test_pinned_view_rebinding_no_crosstalk(spark, tmp_path):
     assert r2.query(q).collect()[0]["n"] == 1  # a's file stats
 
 
+@pytest.mark.smoke
 def test_from_values_tuple_commas_not_hijacked(spark, runner):
     """`FROM VALUES (..), (..)` tuple separators are depth-0 FROM-list
     commas, but the next token is a paren, never an identifier — the
@@ -1964,6 +2119,7 @@ def test_from_values_tuple_commas_not_hijacked(spark, runner):
     assert n == 6  # 2 x 3 cross product
 
 
+@pytest.mark.smoke
 def test_registered_table_named_maintenance_still_resolves(
         spark, runner):
     """A registered TWO-part table whose last segment is literally

@@ -19,6 +19,17 @@ parses exactly this statement family and routes it to
 ``ParquetLakeTable.merge``, so a reference user's MERGE SQL runs
 verbatim, jar or no jar.
 
+Statements are read with Spark's own SQL parser. ``sql_ast.py`` turns
+the Catalyst parse tree into plain records: table references (with
+time-travel clauses and aliases) as spans of the original text, and
+MERGE / DELETE / UPDATE / INSERT / TRUNCATE targets, ON terms, WHEN
+clauses, conditions, SET values and source queries with their exact
+source text. References are spliced at their spans and the texts are
+handed to ``F.expr``, so string literals and nesting are Spark's
+business, never a regex's. The DDL and
+maintenance family (CREATE / ALTER / SHOW / DESCRIBE / CALL / MV /
+DATABASE / USE) is still matched by per-statement regexes.
+
 Supported grammar (a deliberate, validated subset — anything else
 raises with a pointer to what IS supported)::
 
@@ -167,6 +178,7 @@ executable with no jar.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -175,50 +187,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import OP_COL, OP_TS_COL
+from . import sql_ast
 from .table import DELETED_COL, ParquetLakeTable
 
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>[\w.`]+)\s+(?:AS\s+)?(?P<talias>\w+)\s+"
-    r"USING\s+(?P<source>[\w.`]+)\s+(?:AS\s+)?(?P<salias>\w+)\s+"
-    r"ON\s+(?P<on>.+?)\s*(?P<clauses>WHEN\s+.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CLAUSE_RE = re.compile(
-    r"WHEN\s+(?P<not>NOT\s+)?MATCHED\s*(?P<by>BY\s+(?:SOURCE|TARGET)\s*)?"
-    r"(?:AND\s+(?P<cond>.+?))?\s*THEN\s+"
-    r"(?P<action>DELETE|UPDATE\s+SET\s+\*|INSERT\s+\*)",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<target>[\w.`]+)"
-    r"(?:\s+(?:AS\s+)?(?P<alias>(?!WHERE\b)\w+))?"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<target>[\w.`]+)"
-    r"(?:\s+(?:AS\s+)?(?P<alias>(?!SET\b)\w+))?"
-    r"\s+SET\s+(?P<set>.+?)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<target>[\w.`]+)"
-    r"(?:\s*\((?P<cols>[^)]*)\))?"
-    r"\s+(?P<src>(?:VALUES|SELECT)\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_OVERWRITE_RE = re.compile(
-    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(?P<target>[\w.`]+)"
-    r"(?:\s+PARTITION\s*\((?P<part>[^)]*)\))?"
-    r"(?:\s*\((?P<cols>[^)]*)\))?"
-    r"\s+(?P<src>(?:VALUES|SELECT)\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_TRUNCATE_RE = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+(?P<target>[\w.`]+)\s*;?\s*$",
-    re.IGNORECASE,
-)
 # CTAS (r11): CREATE TABLE ... USING lake LOCATION '...' AS SELECT —
 # no column list (the schema IS the query's), source may be any
 # SELECT/WITH the read surface accepts (time travel composes)
@@ -232,258 +203,28 @@ _CTAS_RE = re.compile(
     r"\s+AS\s+(?P<src>(?:SELECT|WITH)\b.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-# time-travel clause in a SELECT: `<table> [FOR] VERSION AS OF 3`,
-# `<table> [FOR] TIMESTAMP AS OF <ts>` — both the Spark/Iceberg
-# spelling (no FOR) and the Athena/SQL-standard spelling (FOR, plus
-# the SYSTEM_VERSION / SYSTEM_TIME synonyms). The literal is an
-# integer (snapshot version — or epoch millis for TIMESTAMP), a
-# quoted string (tag/branch name — or an ISO timestamp), or a
-# TIMESTAMP '...' literal.
-_ASOF_RE = re.compile(
-    r"(?P<ident>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)"
-    r"\s+(?:FOR\s+)?(?P<kind>SYSTEM_VERSION|VERSION|SYSTEM_TIME|TIMESTAMP)"
-    r"\s+AS\s+OF\s+"
-    r"(?P<lit>TIMESTAMP\s+'[^']*'|'[^']*'|\d+)",
-    re.IGNORECASE,
-)
-# Iceberg metadata-table addressing in a SELECT: `FROM <table>.history`
-# etc. — the FROM/JOIN context (or a validated FROM-list comma — r11,
-# judge item #5) is REQUIRED so a qualified column reference
-# (`SELECT t.history FROM ...`) is never hijacked; with an optional
-# VERSION AS OF pin for the two version-scoped kinds (files/partitions).
-# A comma match is accepted ONLY when its offset is in the statement's
-# `_from_comma_positions` set (relation separators), so a SELECT-list
-# or function-argument comma can never introduce a rewrite.
-_META_RE = re.compile(
-    r"(?P<ctx>\b(?:FROM|JOIN)\s+|,\s*)"
-    r"(?P<ident>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)"
-    r"\.(?P<kind>snapshots|files|partitions|refs|history|maintenance)\b"
-    r"(?:\s+(?:FOR\s+)?(?:SYSTEM_VERSION|VERSION)\s+AS\s+OF\s+"
-    r"(?P<v>'[^']*'|\d+))?",
-    re.IGNORECASE,
-)
-# plain FROM/JOIN (or FROM-list comma) reference to a REGISTERED table
-# with no time-travel or metadata clause: resolved to a pinned
-# current-version view, so a runner-registered table is SQL-queryable
-# by its name with no separate register_sql step (and each statement
-# reads ONE snapshot — per-statement snapshot isolation). Runs LAST:
-# time-travel/metadata clauses were already substituted, so whatever
-# still follows FROM/JOIN here is a plain reference.
-_PLAIN_RE = re.compile(
-    r"(?P<ctx>\b(?:FROM|JOIN)\s+|,\s*)"
-    r"(?P<ident>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)",
-    re.IGNORECASE,
-)
+#: ``<table>.<kind>`` metadata tables a query may address (``.maintenance``
+#: is served from the MV registry)
+_META_KINDS = frozenset({"snapshots", "files", "partitions", "refs",
+                         "history", "maintenance"})
+
+def _quote_ident(parts) -> str:
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
-def _mask_strings(text: str) -> str:
-    """Copy of ``text`` with the CONTENTS of string literals blanked
-    to spaces (quotes kept, length preserved) so the rewrite regexes
-    see SQL structure, never data — a literal mentioning a table name
-    plus ``VERSION AS OF`` (or ``.files``) must not be rewritten.
-    Handles single- and double-quoted strings and backslash escapes;
-    SQL's doubled-quote escape degrades safely (close+reopen).
-    Length preservation means match spans on the masked text index
-    straight into the original."""
-    out = list(text)
-    q = None
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if q is None:
-            if ch in "'\"":
-                q = ch
-        elif ch == "\\" and i + 1 < len(text):
-            out[i] = out[i + 1] = " "
-            i += 2
-            continue
-        elif ch == q:
-            q = None
-        else:
-            out[i] = " "
-        i += 1
-    return "".join(out)
-
-
-def _skip_parens(masked: str, i: int) -> int:
-    """Index just past the ``)`` matching the ``(`` at ``masked[i]``
-    (depth scan on the literal-masked text; unbalanced text returns
-    end-of-string, degrading to a no-op for the caller)."""
-    depth = 0
-    for j in range(i, len(masked)):
-        if masked[j] == "(":
-            depth += 1
-        elif masked[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j + 1
-    return len(masked)
-
-
-def _collect_cte_names(masked: str) -> set:
-    """Normalized aliases of every CTE defined anywhere in the
-    statement (``WITH [RECURSIVE] <name> [(cols)] AS ( ... )
-    [, <name2> AS ( ... ) ...]``), scanned on the literal-masked text.
-
-    Standard SQL (and Spark itself) resolves a WITH-clause name BEFORE
-    the catalog, so the table-reference rewrites must never substitute
-    a registered lake table for an identifier the statement binds as a
-    CTE (r10 judge finding: ``WITH t AS (SELECT 99 AS x) SELECT *
-    FROM t`` with ``t`` registered silently read the lake table).
-    Names are collected at EVERY nesting level, deliberately
-    conservative: a registered single-part name that collides with a
-    CTE alias defined in some inner scope is exempted from rewriting
-    even where the CTE is out of scope — Spark then fails loudly
-    (TABLE_OR_VIEW_NOT_FOUND) instead of this runner silently reading
-    the wrong relation; qualify the table reference (two-part name)
-    to disambiguate."""
-    names: set = set()
-    for m in re.finditer(r"\bWITH\b", masked, re.IGNORECASE):
-        i = m.end()
-        rm = re.match(r"\s+RECURSIVE\b", masked[i:], re.IGNORECASE)
-        if rm:
-            i += rm.end()
-        while True:
-            nm = re.match(r"\s*(`[^`]+`|\w+)\s*", masked[i:])
-            if not nm:
-                break
-            name = nm.group(1)
-            i += nm.end()
-            if i < len(masked) and masked[i] == "(":
-                # optional CTE column list: WITH t (a, b) AS (...)
-                i = _skip_parens(masked, i)
-            am = re.match(r"\s*AS\s*\(", masked[i:], re.IGNORECASE)
-            if not am:
-                break  # not a CTE intro (e.g. a misfired WITH match)
-            i = _skip_parens(masked, i + am.end() - 1)
-            names.add(name.replace("`", "").lower())
-            cm = re.match(r"\s*,", masked[i:])
-            if not cm:
-                break
-            i += cm.end()
-    return names
-
-
-#: tokens that END a FROM list when seen at the list's paren depth —
-#: a comma past one of these is no longer a relation separator
-_FROM_LIST_END = frozenset({
-    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "WINDOW", "UNION",
-    "INTERSECT", "EXCEPT", "MINUS", "DISTRIBUTE", "SORT", "CLUSTER",
-    "LATERAL",  # LATERAL VIEW alias lists carry their own commas
-})
-
-
-def _from_comma_positions(masked: str) -> set:
-    """Offsets (into the masked text) of commas that separate
-    RELATIONS in a legacy comma-separated FROM list — the positions
-    where ``, <table-ref>`` may be rewritten. Tracked per paren depth:
-    a ``FROM`` opens the list at its depth; the matching close paren,
-    or any clause keyword in ``_FROM_LIST_END`` at that depth, closes
-    it. Commas at a DEEPER depth (function arguments, subqueries,
-    IN-lists) are never relation separators."""
-    positions: set = set()
-    state: dict = {}  # depth -> True while inside a FROM list
-    depth = 0
-    for tok in re.finditer(r"`[^`]*`|\w+|\S", masked):
-        t = tok.group(0)
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            state.pop(depth, None)
-            depth -= 1
-        elif t == ",":
-            if state.get(depth):
-                positions.add(tok.start())
-        elif t[0].isalpha() or t[0] == "_":
-            u = t.upper()
-            if u == "FROM":
-                state[depth] = True
-            elif u in _FROM_LIST_END and state.get(depth):
-                state[depth] = False
-    return positions
-
-
-def _sub_spans(regex: re.Pattern, statement: str, masked: str, repl):
-    """``regex.sub`` driven by matches on the MASKED text but emitting
-    slices of the ORIGINAL: ``repl(m, orig, tail)`` gets the masked
-    match, an ``orig(group)`` accessor returning the original text at
-    that group's span (quoted literals arrive unmasked), and the
-    masked text FOLLOWING the match (alias lookahead)."""
-    out, pos = [], 0
-    for m in regex.finditer(masked):
-        def orig(group, _m=m):
-            s, e = _m.span(group)
-            return statement[s:e]
-
-        out.append(statement[pos:m.start()])
-        out.append(repl(m, orig, masked[m.end():]))
-        pos = m.end()
-    out.append(statement[pos:])
-    return "".join(out)
-
-
-#: tokens that may legally FOLLOW a relation with no alias between —
-#: if the next token is one of these (or punctuation/EOF), the
-#: original reference had NO alias, so the substituted view gets the
-#: original name's last segment as one (SQL's implicit qualifier:
-#: ``SELECT t.c FROM db.t`` must keep resolving after the rewrite)
-_POST_RELATION_KEYWORDS = frozenset({
-    "WHERE", "ON", "GROUP", "ORDER", "HAVING", "LIMIT", "UNION",
-    "INTERSECT", "EXCEPT", "MINUS", "JOIN", "INNER", "LEFT", "RIGHT",
-    "FULL", "CROSS", "NATURAL", "ANTI", "SEMI", "USING", "WHEN",
-    "TABLESAMPLE", "PIVOT", "UNPIVOT", "LATERAL", "WINDOW",
-    "DISTRIBUTE", "SORT", "CLUSTER", "THEN",
-})
-
-
-#: keywords in ``_POST_RELATION_KEYWORDS`` that are AMBIGUOUS with a
-#: legal bare alias (Spark's non-reserved words): each is treated as
-#: a keyword only when followed by its grammatical continuation, else
-#: it is the relation's explicit alias (r10 advisor: ``FROM t VERSION
-#: AS OF 3 window`` aliased the view as ``window``; the old
-#: classification injected a second alias before it). Keywords NOT
-#: listed here (WHERE, ON, LIMIT, ...) stay unconditional — aliasing
-#: a relation with one of those names needs the ``AS`` spelling.
-_KEYWORD_CONTINUATION = {
-    "GROUP": r"BY\b", "ORDER": r"BY\b", "DISTRIBUTE": r"BY\b",
-    "SORT": r"BY\b", "CLUSTER": r"BY\b",
-    "LEFT": r"(?:OUTER\s+|SEMI\s+|ANTI\s+)?JOIN\b",
-    "RIGHT": r"(?:OUTER\s+|SEMI\s+|ANTI\s+)?JOIN\b",
-    "FULL": r"(?:OUTER\s+)?JOIN\b",
-    "CROSS": r"JOIN\b",
-    "INNER": r"JOIN\b",
-    "ANTI": r"JOIN\b",
-    "SEMI": r"JOIN\b",
-    "NATURAL": r"(?:LEFT\s+|RIGHT\s+|FULL\s+|INNER\s+)?"
-               r"(?:OUTER\s+|SEMI\s+|ANTI\s+)?JOIN\b",
-    "WINDOW": r"(?:`[^`]+`|\w+)\s+AS\b",
-    "USING": r"\(",
-}
-
-
-def _implicit_alias(ident: str, tail: str) -> str:
-    """`` <last-segment>`` when the rewritten reference needs the
-    original name re-attached as an alias, else the empty string
-    (an explicit alias — ``AS x`` or a bare identifier — follows).
-    A following token that is an AMBIGUOUS keyword (``window``,
-    ``group``, ``left`` ... — all legal bare aliases in Spark) counts
-    as the keyword only when its grammatical continuation follows
-    (``GROUP BY``, ``LEFT ... JOIN``, ``WINDOW w AS``); otherwise it
-    IS the alias and nothing is injected."""
-    m = re.match(r"\s*(`[^`]+`|\w+)", tail)
-    tok = m.group(1) if m else ""
-    up = tok.upper()
-    if up == "AS":
-        return ""
-    is_kw = bool(tok) and up in _POST_RELATION_KEYWORDS
-    if is_kw and up in _KEYWORD_CONTINUATION:
-        after = tail[m.end():]
-        is_kw = re.match(r"\s*" + _KEYWORD_CONTINUATION[up], after,
-                         re.IGNORECASE) is not None
-    if tok and not is_kw:
-        return ""  # explicit alias follows
-    last = ident.replace("`", "").split(".")[-1]
-    return f" {last}"
+_MERGE_GRAMMAR = (
+    "MERGE INTO <t> [AS] t USING <view> | (<subquery>) [AS] s "
+    "ON s.k = t.k [AND ...], then WHEN MATCHED [AND <cond>] THEN DELETE "
+    "| UPDATE SET *; WHEN NOT MATCHED [BY TARGET] [AND <cond>] THEN "
+    "INSERT *; WHEN NOT MATCHED BY SOURCE THEN DELETE only")
+#: what the token a MERGE's parse stopped at means: Spark's grammar has
+#: no rule for these clause shapes at all
+_MERGE_SYNTAX = {
+    "UPDATE": "THEN UPDATE is not valid MERGE in a NOT MATCHED clause; ",
+    "INSERT": "THEN INSERT is not valid MERGE in a MATCHED clause; ",
+    "BY": "WHEN MATCHED BY SOURCE is not valid MERGE (BY SOURCE and BY "
+          "TARGET qualify NOT MATCHED); ",
+    "(": "unbalanced parentheses; ", ")": "unbalanced parentheses; "}
 
 
 def _asof_ts_ms(lit: str) -> int:
@@ -530,8 +271,9 @@ def _asof_ts_ms(lit: str) -> int:
 
 def _split_top_level(text: str) -> list[str]:
     """Split on commas outside parentheses AND outside single-quoted
-    strings (SET lists, column lists, CALL arguments — expression
-    arguments and string literals keep their commas)."""
+    strings (DDL property and key lists, MV select items, CALL
+    arguments — expression arguments and string literals keep their
+    commas)."""
     parts, depth, cur, in_str = [], 0, [], False
     for ch in text:
         if ch == "'":
@@ -623,22 +365,22 @@ class MergeSqlRunner:
         return ident.replace("`", "").strip().lower()
 
     def sql(self, statement: str) -> None:
-        """Parse and execute one DML statement (MERGE INTO, DELETE
-        FROM, UPDATE, or INSERT INTO) against a registered table.
-        SELECT / WITH statements delegate to :meth:`query` (time-travel
-        resolution) and return its DataFrame."""
+        """Parse and execute one statement against registered tables:
+        the row-level DML family (MERGE INTO, DELETE FROM, UPDATE,
+        INSERT [OVERWRITE], TRUNCATE) or the DDL family. SELECT / WITH
+        statements delegate to :meth:`query` (time-travel resolution)
+        and return its DataFrame."""
         head = statement.lstrip()[:6].upper()
         if head.startswith("SELECT") or re.match(r"^\s*WITH\b", statement,
                                                  re.IGNORECASE):
             return self.query(statement)
+        if head.startswith("MERGE"):
+            return self._run_merge(statement)
         if head.startswith("DELETE"):
             return self._run_delete(statement)
         if head.startswith("UPDATE"):
             return self._run_update(statement)
         if head.startswith("INSERT"):
-            if re.match(r"^\s*INSERT\s+OVERWRITE\b", statement,
-                        re.IGNORECASE):
-                return self._run_insert_overwrite(statement)
             return self._run_insert(statement)
         if head.startswith("TRUNCA"):
             return self._run_truncate(statement)
@@ -647,7 +389,15 @@ class MergeSqlRunner:
         if head.startswith("DESC"):
             return self._run_describe(statement)
         if head.startswith("EXPLAI"):
-            return self._run_explain(statement)
+            # the inner query goes through query()'s resolution, so the
+            # plan a user inspects is the plan the engine executes
+            if not re.match(r"(?is)^\s*EXPLAIN\s+(?:(?:EXTENDED|FORMATTED"
+                            r"|CODEGEN|COST)\s+)?(?:SELECT|WITH)\b",
+                            statement):
+                raise MergeSqlError(
+                    "unsupported EXPLAIN; expected EXPLAIN [EXTENDED|"
+                    "FORMATTED|CODEGEN|COST] SELECT ...")
+            return self.query(statement)
         if head.startswith("ALTER"):
             return self._run_alter(statement)
         if head.startswith("CALL"):
@@ -665,73 +415,82 @@ class MergeSqlRunner:
             return self._run_use(statement)
         if head.startswith("CREATE"):
             return self._run_create(statement)
-        statement = self._inline_merge_source(statement)
-        m = _MERGE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported statement; expected MERGE INTO <t> t USING "
-                "<s>|(SELECT ...) s ON ... WHEN [NOT] MATCHED [AND cond] "
-                "THEN DELETE | UPDATE SET * | INSERT * — or DELETE FROM "
-                "/ UPDATE ... SET / INSERT INTO / ALTER TABLE"
-            )
-        # MERGE may target a not-yet-created table (first merge creates)
-        table = self._resolve(m.group("target"), require_exists=False)
-        talias, salias = m.group("talias"), m.group("salias")
-        self._check_on(m.group("on"), table, talias, salias)
+        raise MergeSqlError(
+            "unsupported statement; expected MERGE INTO / DELETE FROM / "
+            "UPDATE / INSERT / TRUNCATE, SELECT, or CREATE / ALTER / SHOW "
+            "/ DESCRIBE / CALL / USE")
 
-        raw_clauses = list(_CLAUSE_RE.finditer(m.group("clauses")))
-        if not raw_clauses:
-            raise MergeSqlError("no WHEN clauses found")
-        # (kind, not_matched, cond_text, cond_col) in statement order —
-        # SQL MERGE gives the first admitting clause the row. BY SOURCE
+    def _run_merge(self, statement: str) -> None:
+        """``MERGE INTO`` (grammar in the module docstring), compiled
+        from the parse tree onto one ``table.merge`` call."""
+        m = self._parse_dml(statement, sql_ast.Merge, "MERGE",
+                            _MERGE_GRAMMAR)
+        # MERGE may target a not-yet-created table (first merge creates)
+        table = self._resolve(".".join(m.target), require_exists=False)
+        talias = m.target_alias or m.target[-1]
+        salias = m.source_alias or (m.source or [None])[-1]
+        if salias is None:
+            raise MergeSqlError("MERGE USING (<subquery>) needs an alias")
+        self._check_on(m.on, table, talias, salias)
+        # (kind, not_matched, cond_text), matched clauses first, each
+        # group in statement order — SQL MERGE gives the first admitting
+        # clause the row, and a row is either matched or not. BY SOURCE
         # deletes are tracked separately: they generate rows FROM the
         # target, not a routing of source rows.
         parsed = []
         by_source_delete = False
-        for c in raw_clauses:
-            action = re.sub(r"\s+", " ", c.group("action")).upper()
-            not_matched = bool(c.group("not"))
-            by = re.sub(r"\s+", "", c.group("by") or "").upper()
-            if by == "BYSOURCE":
-                if not not_matched:
-                    raise MergeSqlError(
-                        "WHEN MATCHED BY SOURCE is not valid MERGE")
-                if action != "DELETE":
+        for c in m.clauses:
+            if c.matched == "not_matched_by_source":
+                if c.action != "delete":
                     raise MergeSqlError(
                         "NOT MATCHED BY SOURCE supports THEN DELETE only "
                         "in this subset (UPDATE there needs target-side "
                         "expressions)")
-                if c.group("cond") is not None:
+                if c.cond is not None:
                     raise MergeSqlError(
                         "conditions on NOT MATCHED BY SOURCE reference "
                         "target columns; unsupported in this subset")
                 by_source_delete = True
                 continue
-            if action == "DELETE" and not_matched:
-                raise MergeSqlError("WHEN NOT MATCHED THEN DELETE "
-                                    "is not meaningful")
-            if action != "DELETE" and (
-                (action == "UPDATE SET *") == not_matched
-            ):
+            kind = {"delete": "delete", "update_star": "update",
+                    "insert_star": "insert"}.get(c.action)
+            if kind is None:
                 raise MergeSqlError(
-                    f"WHEN {'NOT ' if not_matched else ''}MATCHED THEN "
-                    f"{action} is not valid MERGE (UPDATE is matched-only, "
-                    "INSERT is not-matched-only)"
-                )
-            kind = ("delete" if action == "DELETE"
-                    else "update" if action == "UPDATE SET *" else "insert")
-            cond_text = (None if c.group("cond") is None
-                         else re.sub(r"\s+", " ", c.group("cond")).strip().lower())
-            parsed.append((kind, not_matched, cond_text,
-                           self._src_condition(c.group("cond"), salias, talias)))
+                    f"WHEN clause action {c.action!r} is outside this "
+                    "subset: UPDATE SET * / INSERT * only (full row images)")
+            cond = c.cond
+            if talias.lower() in c.qualifiers:
+                # the condition runs on the source batch before the merge
+                raise MergeSqlError(
+                    "clause conditions may reference source columns only "
+                    "(the engine's latest-wins merge already orders "
+                    f"against the target); got {cond!r}")
+            parsed.append((kind, c.matched == "not_matched", cond))
 
-        src_norm = self._norm_ident(m.group("source"))
-        if src_norm in self._tables:
+        if m.source_query is not None:
+            # USING (<subquery>) runs through query(), so it may pin a
+            # time-travel read (USING (SELECT * FROM t VERSION AS OF 3)
+            # is the restore-a-version MERGE). The view is
+            # content-addressed (same subquery text -> same view, no
+            # unbounded counter) and runner-scoped (two live runners may
+            # resolve the same text against different registrations);
+            # it rides the same LRU cap as the asof/meta pins
+            sub = m.source_query
+            digest = hashlib.sha1(sub.encode()).hexdigest()[:10]
+            view = f"__merge_src_{id(self):x}_{digest}"
+            self.query(sub).createOrReplaceTempView(view)
+            self._track_asof_view(view, {view})
+            src = self.spark.table(view)
+        elif self._norm_ident(".".join(m.source)) in self._tables:
             # lake-to-lake MERGE by registered name (the USING side
             # reads the source table's CURRENT live rows)
-            src = self._tables[src_norm].read_data()
+            src = self._tables[
+                self._norm_ident(".".join(m.source))].read_data()
         else:
-            src = self.spark.table(m.group("source"))
+            src = self.spark.table(_quote_ident(m.source))
+        # clause conditions are the statement's own text, qualified by
+        # the source alias as written
+        src = src.alias(salias)
         parts = []
         if parsed:
             routed = (self._fast_path_batch(src, parsed)
@@ -766,52 +525,6 @@ class MergeSqlRunner:
         for extra in parts[1:]:
             batch = batch.unionByName(extra, allowMissingColumns=True)
         table.merge(batch)
-
-    def _inline_merge_source(self, statement: str) -> str:
-        """``MERGE INTO t t USING (SELECT ...) s`` — evaluate the
-        subquery source through :meth:`query` (so it may itself pin a
-        time-travel read: ``USING (SELECT * FROM t VERSION AS OF 3)``
-        is the restore-a-version MERGE) and substitute a temp view,
-        leaving the named-view grammar untouched. The matching close
-        paren is found with the house literal-aware depth scan."""
-        m = re.match(
-            r"(?is)^(?P<head>\s*MERGE\s+INTO\s+[\w.`]+\s+(?:AS\s+)?\w+"
-            r"\s+USING\s*)\((?P<rest>.+)$",
-            statement)
-        if not m:
-            return statement
-        rest = m.group("rest")
-        depth, end = 1, -1
-        # scan the literal-masked twin: a quoted ')' — single- OR
-        # double-quoted, backslash escapes included — is data
-        for i, ch in enumerate(_mask_strings(rest)):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    end = i
-                    break
-        if end < 0:
-            raise MergeSqlError(
-                "unbalanced parentheses in MERGE USING (subquery)")
-        sub = rest[:end].strip()
-        if not re.match(r"(?is)^(SELECT|WITH|VALUES)\b", sub):
-            raise MergeSqlError(
-                f"MERGE USING (...) expects a SELECT/VALUES subquery, "
-                f"got {sub[:40]!r}")
-        import hashlib
-
-        # content-addressed (same subquery text -> same view, no
-        # unbounded counter) + runner-scoped (two live runners may
-        # resolve the same text against different registrations);
-        # rides the same LRU cap as the asof/meta pins
-        digest = hashlib.sha1(sub.encode()).hexdigest()[:10]
-        view = f"__merge_src_{id(self):x}_{digest}"
-        (self.query(sub) if not sub.upper().startswith("VALUES")
-         else self.spark.sql(sub)).createOrReplaceTempView(view)
-        self._track_asof_view(view, {view})
-        return m.group("head") + view + rest[end + 1:]
 
     # -- SELECT with time travel (Iceberg/Athena read parity) ------------
 
@@ -850,14 +563,11 @@ class MergeSqlRunner:
         catalog). Statements with no time-travel clause pass straight
         through, so ``query`` is a drop-in read entry point.
 
-        Validated-subset caveats: clause detection is textual but
-        STRING-LITERAL-SAFE — the rewrites scan a literal-masked
-        twin of the statement (``_mask_strings``), so a literal that
-        merely mentions a table name plus ``VERSION AS OF`` or
-        ``.files`` is never touched; metadata refs additionally
-        require FROM/JOIN context (or a validated FROM-list comma —
-        relation separators only, so a qualified COLUMN named
-        ``history``/``files`` in a SELECT list is never hijacked).
+        Resolution caveats: table references are read from Spark's
+        own parse tree (``sql_ast.query_refs``) and replaced at their
+        exact offsets, so a string literal, a comment or a column that
+        merely looks like a table, a time-travel clause or a metadata
+        table (``SELECT t.history FROM ...``) is never touched.
         Name resolution follows Spark/standard SQL precedence: an
         identifier bound as a CTE anywhere in the statement is NEVER
         rewritten (``WITH t AS (...) SELECT * FROM t`` reads the CTE
@@ -866,165 +576,63 @@ class MergeSqlRunner:
         registered spelling still pins the lake table, and a
         registered name colliding with an out-of-scope inner CTE
         alias fails loudly in Spark rather than silently rebinding —
-        qualify the reference to disambiguate."""
+        qualify the reference to disambiguate. A statement that does
+        not parse goes to ``spark.sql`` unchanged, which reports
+        Spark's own syntax error."""
         return self.spark.sql(self._rewrite(statement))
 
     def _rewrite(self, statement: str) -> str:
-        """The text-level resolution behind :meth:`query` (and
-        ``EXPLAIN``): returns the statement with every registered-ref
-        / time-travel / metadata clause substituted by a pinned temp
-        view, leaving everything else for Spark."""
-        masked0 = _mask_strings(statement)
-        cte_names = _collect_cte_names(masked0)
-        from_commas: set = set()
+        """The resolution behind :meth:`query` (and ``EXPLAIN``): the
+        statement with every registered-ref / time-travel / metadata
+        table reference replaced by a pinned temp view, leaving
+        everything else for Spark. A FROM reference with no explicit
+        alias gets its last name segment as one, so qualified columns
+        (``SELECT t.c FROM db.t``) keep resolving; ``TABLE <name>``
+        takes none."""
+        try:
+            refs = sql_ast.query_refs(self.spark, statement)
+        except sql_ast.SqlSyntaxError:
+            return statement
+        fresh: set = set()
+        out = statement
+        # right to left: a splice never moves an offset still to come
+        for rel in sorted(refs.relations, key=lambda r: -r.span[0]):
+            view = self._pin(rel, refs.ctes, fresh)
+            if view is not None:
+                stop = rel.travel.clause[1] if rel.travel else rel.span[1]
+                alias = ("" if rel.aliased or rel.table_form
+                         else " " + _quote_ident(rel.parts[-1:]))
+                out = out[:rel.span[0]] + view + alias + out[stop + 1:]
+        return out
 
-        def _comma_ok(m: re.Match) -> bool:
-            # a comma-context match counts only when the comma is a
-            # FROM-list RELATION separator; every other comma
-            # (SELECT list, IN list, argument) leaves the text alone
-            if "ctx" not in m.re.groupindex:
-                return True
-            ctx = m.group("ctx")
-            return (not ctx.startswith(",")
-                    or m.start("ctx") in from_commas)
-
-        def _cte_shadowed(ident: str, norm: str) -> bool:
-            # WITH binds tighter than this runner's registry: a
-            # SINGLE-part reference whose name the statement defines
-            # as a CTE resolves to the CTE (Spark's own precedence)
-            return "." not in norm and norm in cte_names
-
-        def _sub(m: re.Match, orig, tail) -> str:
-            ident = m.group("ident")
-            norm = self._norm_ident(ident)
-            if _cte_shadowed(ident, norm):
-                return orig(0)
-            norm = self._expand_ident(norm)  # USE <db> resolution
-            if norm not in self._tables:
-                return orig(0)  # not ours — Spark may resolve it
-            table = self._tables[norm]
-            kind = m.group("kind").upper()
-            lit = orig("lit").strip()
-            safe = self._safe_name(norm, table)
-            try:
-                if kind in ("VERSION", "SYSTEM_VERSION"):
-                    if re.match(r"^\d+$", lit):
-                        version = int(lit)
-                    else:
-                        version = self._resolve_ref_version(
-                            table, lit, ident)
-                    # a version-suffixed view's content is immutable —
-                    # reuse a live pin instead of re-resolving the
-                    # manifest (r11; refs were already resolved to the
-                    # version above, so a moved branch head never
-                    # reuses a stale pin)
-                    view = f"__lake_asof_{safe}_v{version}"
-                    if self._reuse_view(view, fresh):
-                        return view + _implicit_alias(ident, tail)
-                    df = table.read_data(as_of_version=version)
-                else:
-                    # timestamp pins are NOT reusable by name: a
-                    # future-dated literal resolves to head-at-query-
-                    # time, which a later commit changes
-                    ts_ms = _asof_ts_ms(lit)
-                    view = f"__lake_asof_{safe}_ts{ts_ms}"
-                    df = table.read_data(as_of_timestamp_ms=ts_ms)
-            except MergeSqlError:
-                raise
-            except ValueError as exc:
-                # expired/never-committed version, pre-first-commit
-                # timestamp — surface as a statement error
-                raise MergeSqlError(
-                    f"{kind} AS OF {lit} on {ident!r}: {exc}") from None
-            df.createOrReplaceTempView(view)
-            self._track_asof_view(view, fresh)
-            return view + _implicit_alias(ident, tail)
-
-        def _sub_meta(m: re.Match, orig, tail) -> str:
-            if not _comma_ok(m):
-                return orig(0)
-            ident = m.group("ident")
-            norm = self._norm_ident(ident)
-            if _cte_shadowed(ident, norm):
-                return orig(0)
-            norm = self._expand_ident(norm)  # USE <db> resolution
-            if m.group("kind").lower() == "maintenance":
-                # MV maintainer observability (r11 judge item #6):
-                # `<mv>.maintenance` is addressed by the MV registry,
-                # served from the maintainer's persisted sidecar
-                if norm not in self._mvs:
-                    return orig(0)
-                if m.group("v") is not None:
-                    raise MergeSqlError(
-                        f"{ident}.maintenance is not version-scoped")
-                st = self._mvs[norm].maintenance_stats()
-                from pyspark.sql import types as T
-
-                df = self.spark.createDataFrame([(
-                    int(st["folded"]), int(st["fallback"]),
-                    int(st["skipped"]), st["last_batch_id"],
-                    st["last_route"], st["cursor"],
-                    st["updated_at_ms"])], T.StructType([
-                        T.StructField("folded", T.LongType(), False),
-                        T.StructField("fallback", T.LongType(), False),
-                        T.StructField("skipped", T.LongType(), False),
-                        T.StructField("last_batch_id", T.LongType()),
-                        T.StructField("last_route", T.StringType()),
-                        T.StructField("cursor", T.LongType()),
-                        T.StructField("updated_at_ms", T.LongType())]))
-                safe = re.sub(r"\W+", "_", norm)
-                view = f"__lake_meta_{safe}_maintenance"
-                df.createOrReplaceTempView(view)
-                self._track_asof_view(view, fresh)
-                return orig("ctx") + view + _implicit_alias(
-                    f"{ident}.maintenance", tail)
-            if norm not in self._tables:
-                return orig(0)  # not ours — Spark's to resolve
-            table = self._tables[norm]
-            kind = m.group("kind").lower()
-            v = None if m.group("v") is None else orig("v").strip()
-            if v is not None and kind not in ("files", "partitions"):
-                raise MergeSqlError(
-                    f"{ident}.{kind} is table-global; VERSION AS OF "
-                    "applies to .files / .partitions only")
-            if v is not None and v.startswith("'"):
-                # quoted ref: resolve the tag/branch head to a version
-                v = str(self._resolve_ref_version(table, v, ident))
-            safe = self._safe_name(norm, table)
-            view = f"__lake_meta_{safe}_{kind}" + (
-                "" if v is None else f"_v{v}")
-            # version-PINNED metadata (files/partitions AS OF v) is
-            # immutable — reuse a live pin; version-free kinds track
-            # the current table and must re-register every statement
-            if v is not None and self._reuse_view(view, fresh):
-                return orig("ctx") + view + _implicit_alias(
-                    f"{ident}.{kind}", tail)
-            try:
-                df = table.metadata(kind, None if v is None else int(v))
-            except ValueError as exc:
-                raise MergeSqlError(
-                    f"{ident}.{kind} VERSION AS OF {v}: {exc}") from None
-            df.createOrReplaceTempView(view)
-            self._track_asof_view(view, fresh)
-            return orig("ctx") + view + _implicit_alias(
-                f"{ident}.{kind}", tail)
-
-        def _sub_plain(m: re.Match, orig, tail) -> str:
-            if not _comma_ok(m):
-                return orig(0)
-            ident = m.group("ident")
-            norm = self._norm_ident(ident)
-            if _cte_shadowed(ident, norm):
-                return orig(0)
-            norm = self._expand_ident(norm)  # USE <db> resolution
-            if norm not in self._tables:
-                return orig(0)  # Spark's to resolve (views, catalog)
-            table = self._tables[norm]
+    def _pin(self, rel, ctes: frozenset, fresh: set) -> str | None:
+        """Pinned temp view for one table reference, or None when it
+        is not this runner's to resolve. WITH binds tighter than the
+        registry: a SINGLE-part name the statement binds as a CTE
+        resolves to the CTE (Spark's own precedence)."""
+        names = [p.lower() for p in rel.parts]
+        ident = ".".join(rel.parts)
+        if names[-1] in _META_KINDS and len(names) > 1:
+            base = ".".join(names[:-1])
+            if "." in base or base not in ctes:
+                view = self._pin_meta(self._expand_ident(base), names[-1],
+                                      rel.travel, ident, fresh)
+                if view is not None:
+                    return view
+        norm = ".".join(names)
+        if "." not in norm and norm in ctes:
+            return None
+        norm = self._expand_ident(norm)  # USE <db> resolution
+        if norm not in self._tables:
+            return None  # Spark's to resolve (views, catalog)
+        table = self._tables[norm]
+        safe = self._safe_name(norm, table)
+        tt = rel.travel
+        if tt is None:
             mref = table._manifest()
             if mref is None:
-                return orig(0)  # no committed snapshot: let Spark err
+                return None  # no committed snapshot: let Spark err
             version = mref["version"]
-            safe = self._safe_name(norm, table)
             view = f"__lake_cur_{safe}_v{version}"
             # same-version pins are immutable: repeated statements over
             # an unchanged table reuse the live view instead of
@@ -1035,33 +643,117 @@ class MergeSqlRunner:
                 table.read_data(as_of_version=version)\
                     .createOrReplaceTempView(view)
                 self._track_asof_view(view, fresh)
-            return orig("ctx") + view + _implicit_alias(ident, tail)
+            return view
+        lit = (tt.literal if tt.kind == "TIMESTAMP"
+               else f"'{tt.version}'" if tt.quoted else tt.version)
+        try:
+            if tt.kind == "VERSION":
+                version = self._resolve_ref_version(table, tt, ident)
+                # a version-suffixed view's content is immutable —
+                # reuse a live pin instead of re-resolving the manifest
+                # (r11; refs were already resolved to the version above,
+                # so a moved branch head never reuses a stale pin)
+                view = f"__lake_asof_{safe}_v{version}"
+                if self._reuse_view(view, fresh):
+                    return view
+                df = table.read_data(as_of_version=version)
+            else:
+                # timestamp pins are NOT reusable by name: a
+                # future-dated literal resolves to head-at-query-time,
+                # which a later commit changes
+                ts_ms = _asof_ts_ms(lit)
+                view = f"__lake_asof_{safe}_ts{ts_ms}"
+                df = table.read_data(as_of_timestamp_ms=ts_ms)
+        except MergeSqlError:
+            raise
+        except ValueError as exc:
+            # expired/never-committed version, pre-first-commit
+            # timestamp — surface as a statement error
+            raise MergeSqlError(
+                f"{tt.kind} AS OF {lit} on {ident!r}: {exc}") from None
+        df.createOrReplaceTempView(view)
+        self._track_asof_view(view, fresh)
+        return view
 
-        fresh: set = set()
-        rewritten = statement
-        for regex, sub in ((_META_RE, _sub_meta), (_ASOF_RE, _sub),
-                           (_PLAIN_RE, _sub_plain)):
-            masked = _mask_strings(rewritten)
-            from_commas.clear()
-            from_commas.update(_from_comma_positions(masked))
-            rewritten = _sub_spans(regex, rewritten, masked, sub)
-        return rewritten
+    def _pin_meta(self, norm: str, kind: str, tt, ident: str,
+                  fresh: set) -> str | None:
+        """Pinned view of the ``<norm>.<kind>`` metadata table, or None
+        when ``norm`` is not registered (so a table literally named
+        ``x.maintenance`` still resolves as a data table)."""
+        if kind == "maintenance":
+            # MV maintainer observability (r11 judge item #6):
+            # `<mv>.maintenance` is addressed by the MV registry,
+            # served from the maintainer's persisted sidecar
+            if norm not in self._mvs:
+                return None
+            if tt is not None:
+                raise MergeSqlError(f"{ident} is not version-scoped")
+            st = self._mvs[norm].maintenance_stats()
+            from pyspark.sql import types as T
+
+            df = self.spark.createDataFrame([(
+                int(st["folded"]), int(st["fallback"]),
+                int(st["skipped"]), st["last_batch_id"],
+                st["last_route"], st["cursor"],
+                st["updated_at_ms"])], T.StructType([
+                    T.StructField("folded", T.LongType(), False),
+                    T.StructField("fallback", T.LongType(), False),
+                    T.StructField("skipped", T.LongType(), False),
+                    T.StructField("last_batch_id", T.LongType()),
+                    T.StructField("last_route", T.StringType()),
+                    T.StructField("cursor", T.LongType()),
+                    T.StructField("updated_at_ms", T.LongType())]))
+            safe = re.sub(r"\W+", "_", norm)
+            view = f"__lake_meta_{safe}_maintenance"
+            df.createOrReplaceTempView(view)
+            self._track_asof_view(view, fresh)
+            return view
+        if norm not in self._tables:
+            return None  # not ours — Spark's to resolve
+        table = self._tables[norm]
+        v = None
+        if tt is not None:
+            if kind not in ("files", "partitions"):
+                raise MergeSqlError(
+                    f"{ident} is table-global; VERSION AS OF applies to "
+                    ".files / .partitions only")
+            if tt.kind != "VERSION":
+                raise MergeSqlError(
+                    f"{ident} takes VERSION AS OF, not TIMESTAMP AS OF")
+            v = self._resolve_ref_version(table, tt, ident)
+        view = f"__lake_meta_{self._safe_name(norm, table)}_{kind}" + (
+            "" if v is None else f"_v{v}")
+        # version-PINNED metadata (files/partitions AS OF v) is
+        # immutable — reuse a live pin; version-free kinds track the
+        # current table and must re-register every statement
+        if v is not None and self._reuse_view(view, fresh):
+            return view
+        try:
+            df = table.metadata(kind, v)
+        except ValueError as exc:
+            raise MergeSqlError(
+                f"{ident} VERSION AS OF {v}: {exc}") from None
+        df.createOrReplaceTempView(view)
+        self._track_asof_view(view, fresh)
+        return view
 
     @staticmethod
-    def _resolve_ref_version(table: ParquetLakeTable, lit: str,
+    def _resolve_ref_version(table: ParquetLakeTable, tt,
                              ident: str) -> int:
-        """Version pinned by a QUOTED ref literal: a tag first, then a
+        """Version a ``VERSION AS OF`` clause pins: an integer literal
+        is the version itself; a quoted name is a tag first, then a
         branch head (Iceberg resolves VERSION AS OF names against the
         shared refs namespace)."""
-        name = lit.strip()[1:-1].replace("''", "'")
+        if not tt.quoted and tt.version.isdigit():
+            return int(tt.version)
         try:
-            return table.tag_version(name)
+            return table.tag_version(tt.version)
         except ValueError:
-            version = table._read_pointer(table._ref_file(name))
+            version = table._read_pointer(table._ref_file(tt.version))
             if version <= 0:
                 raise MergeSqlError(
-                    f"VERSION AS OF {lit}: no tag or branch named "
-                    f"{name!r} on {ident!r}") from None
+                    f"VERSION AS OF '{tt.version}': no tag or branch "
+                    f"named {tt.version!r} on {ident!r}") from None
             return version
 
     @staticmethod
@@ -1076,8 +768,6 @@ class MergeSqlRunner:
         track the table it actually reads; two runners binding the same
         name to the SAME path still share pins, which is the intended
         cross-runner reuse."""
-        import hashlib
-
         tok = hashlib.md5(str(table.path).encode()).hexdigest()[:8]
         return re.sub(r"\W+", "_", norm) + "_" + tok
 
@@ -1139,11 +829,11 @@ class MergeSqlRunner:
         # filter BEFORE rewriting OP_COL — clause conditions may
         # reference the source's own _op column (s._op = 'delete')
         if [p[0] for p in parsed] == ["delete"]:
-            cond = parsed[0][3]
-            batch = base if cond is None else base.filter(cond)
+            cond = parsed[0][2]
+            batch = base if cond is None else base.filter(F.expr(cond))
             return batch.withColumn(OP_COL, F.lit("delete"))
-        cond = next(p[3] for p in parsed if p[0] == "update")
-        batch = base if cond is None else base.filter(cond)
+        cond = next(p[2] for p in parsed if p[0] == "update")
+        batch = base if cond is None else base.filter(F.expr(cond))
         return batch.withColumn(OP_COL, F.lit("upsert"))
 
     def _probed_batch(self, src: DataFrame, table: ParquetLakeTable,
@@ -1163,10 +853,10 @@ class MergeSqlRunner:
 
         op_expr = F.lit(None).cast("string")
         admitted = F.lit(False)
-        for kind, not_matched, _txt, cond in reversed(parsed):
+        for kind, not_matched, cond in reversed(parsed):
             gate = (~matched) if not_matched else matched
             if cond is not None:
-                gate = gate & cond
+                gate = gate & F.expr(cond)
             action = F.lit("delete" if kind == "delete" else "upsert")
             op_expr = F.when(gate, action).otherwise(op_expr)
             admitted = gate | admitted
@@ -1224,71 +914,61 @@ class MergeSqlRunner:
         return df.drop(*[c for c in (DELETED_COL, *hidden)
                          if c in df.columns])
 
-    @staticmethod
-    def _strip_alias(text: str, alias: str | None) -> str:
-        """Remove ``alias.`` prefixes OUTSIDE single-quoted string
-        literals only — a raw re.sub also rewrote matches inside
-        literals (alias ``t`` turned ``'http://t.co'`` into
-        ``'http://co'``, advisor finding r4). Splitting on ``'`` puts
-        literal text at odd indexes (SQL's escaped ``''`` just yields
-        an untouched empty segment)."""
-        if not alias:
-            return text
-        pat = re.compile(rf"\b{re.escape(alias)}\.", re.IGNORECASE)
-        return "'".join(
-            pat.sub("", seg) if i % 2 == 0 else seg
-            for i, seg in enumerate(text.split("'"))
-        )
-
-    @classmethod
-    def _where_expr(cls, cond: str | None, alias: str | None):
-        if cond is None:
-            return None
-        return F.expr(cls._strip_alias(cond, alias))
+    def _parse_dml(self, statement: str, kind: type, verb: str,
+                   grammar: str):
+        """The ``sql_ast`` record of a row-level DML statement; anything
+        that does not parse, or parses to another shape, raises
+        :class:`MergeSqlError` naming the supported grammar."""
+        try:
+            parsed = sql_ast.statement(self.spark, statement)
+        except sql_ast.SqlSyntaxError as exc:
+            paren = re.search(r"missing '[()]'", exc.hint)
+            why = _MERGE_SYNTAX.get("(" if paren else exc.token.upper(), "")
+            raise MergeSqlError(
+                f"{why if kind is sql_ast.Merge else ''}unsupported {verb}: "
+                f"{exc}; expected {grammar}") from None
+        if not isinstance(parsed, kind):
+            raise MergeSqlError(f"unsupported {verb}; expected {grammar}")
+        return parsed
 
     def _run_delete(self, statement: str) -> None:
         """``DELETE FROM t WHERE ...`` — Iceberg COW DELETE shape: the
         WHERE is pushed into the snapshot scan (partition/footer-stat
         pruning), matching rows merge as ``_op='delete'``, and the
         rewrite touches only partitions that actually hold matches
-        (``merge``'s affected-partition probe)."""
-        m = _DELETE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported DELETE; expected "
-                "DELETE FROM <t> [[AS] a] [WHERE <cond>]"
-            )
-        table = self._resolve(m.group("target"))
-        cond = self._where_expr(m.group("where"), m.group("alias"))
-        data = self._dml_state(table)
-        batch = data.filter(cond) if cond is not None else data
-        table.merge(batch.withColumn(OP_COL, F.lit("delete")))
+        (``merge``'s affected-partition probe). The WHERE is the
+        statement's own text, evaluated over the table aliased as the
+        statement names it (its explicit alias, else its last name
+        segment)."""
+        d = self._parse_dml(statement, sql_ast.Delete, "DELETE",
+                            "DELETE FROM <t> [[AS] a] [WHERE <cond>]")
+        table = self._resolve(".".join(d.target))
+        data = self._dml_state(table).alias(d.alias or d.target[-1])
+        table.merge(data.filter(F.expr(d.where))
+                    .withColumn(OP_COL, F.lit("delete")))
 
     def _run_update(self, statement: str) -> None:
         """``UPDATE t SET c = expr [, ...] WHERE ...`` — scans matching
         rows, applies every SET expression against the PRE-update row
         image (standard SQL: one select, not chained withColumn), and
         merges the full-row results as upserts. SET on a key column is
-        rejected (a key rewrite is delete+insert — say it with MERGE)."""
-        m = _UPDATE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported UPDATE; expected "
-                "UPDATE <t> [[AS] a] SET c = expr [, ...] [WHERE <cond>]"
-            )
-        table = self._resolve(m.group("target"))
-        alias = m.group("alias")
-        data = self._dml_state(table)
+        rejected (a key rewrite is delete+insert — say it with MERGE).
+        Values and WHERE are evaluated like DELETE's."""
+        u = self._parse_dml(
+            statement, sql_ast.Update, "UPDATE",
+            "UPDATE <t> [[AS] a] SET c = expr [, ...] [WHERE <cond>]")
+        table = self._resolve(".".join(u.target))
+        alias = u.alias or u.target[-1]
+        data = self._dml_state(table).alias(alias)
         assignments: dict[str, str] = {}
-        for piece in _split_top_level(m.group("set")):
-            am = re.match(r"^(\w+)\s*=\s*(.+)$", piece, re.DOTALL)
-            if not am:
-                raise MergeSqlError(f"bad SET assignment {piece!r}")
-            col = am.group(1)
-            matches = [c for c in data.columns if c.lower() == col.lower()]
+        for parts, value in u.assignments:
+            if len(parts) == 2 and parts[0].lower() == alias.lower():
+                parts = parts[1:]  # `SET a.c = ...` names the target's c
+            matches = [c for c in data.columns
+                       if len(parts) == 1 and c.lower() == parts[0].lower()]
             if not matches:
                 raise MergeSqlError(
-                    f"SET references unknown column {col!r}; "
+                    f"SET references unknown column {'.'.join(parts)!r}; "
                     f"table columns: {data.columns}"
                 )
             col = matches[0]
@@ -1299,10 +979,8 @@ class MergeSqlRunner:
                 )
             if col in assignments:
                 raise MergeSqlError(f"duplicate SET of column {col!r}")
-            rhs = self._strip_alias(am.group(2).strip(), alias)
-            assignments[col] = rhs
-        cond = self._where_expr(m.group("where"), alias)
-        matched = data.filter(cond) if cond is not None else data
+            assignments[col] = value
+        matched = data if u.where is None else data.filter(F.expr(u.where))
         new_cols = {
             c: F.expr(rhs).cast(data.schema[c].dataType).alias(c)
             for c, rhs in assignments.items()
@@ -1319,16 +997,17 @@ class MergeSqlRunner:
         column list (or the table's full column order), casts to the
         declared types, and merges as upserts. Divergence from
         Iceberg's append-only INSERT, documented in the module
-        docstring: duplicate keys resolve latest-wins, not duplicated."""
-        m = _INSERT_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported INSERT; expected "
-                "INSERT INTO <t> [(c1, ...)] VALUES (...) | SELECT ..."
-            )
-        table = self._resolve(m.group("target"))
-        batch = self._conform_insert_source(
-            table, m.group("cols"), m.group("src"))
+        docstring: duplicate keys resolve latest-wins, not duplicated.
+        ``INSERT OVERWRITE`` goes on to :meth:`_run_insert_overwrite`."""
+        ins = self._parse_dml(
+            statement, sql_ast.Insert, "INSERT",
+            "INSERT INTO <t> [(c1, ...)] VALUES (...) | SELECT ... or "
+            "INSERT OVERWRITE [TABLE] <t> [PARTITION (p = <lit>)] "
+            "[(c1, ...)] VALUES (...) | SELECT ...")
+        table = self._resolve(".".join(ins.target))
+        if ins.overwrite:
+            return self._run_insert_overwrite(ins, table)
+        batch = self._conform_insert_source(table, ins.cols, ins.query)
         if self.on_duplicate == "error":
             self._reject_duplicate_keys(table, batch)
         # statement-executed-now semantics: without a timestamp the
@@ -1341,7 +1020,7 @@ class MergeSqlRunner:
         table.merge(batch.withColumn(OP_COL, F.lit("upsert")))
 
     def _conform_insert_source(self, table: ParquetLakeTable,
-                               cols_text: str | None, src_sql: str,
+                               cols: tuple, src_sql: str,
                                inject: dict | None = None) -> DataFrame:
         """Evaluate an INSERT source (VALUES literal or any Spark
         SELECT), conform it positionally to the declared column list,
@@ -1352,9 +1031,7 @@ class MergeSqlRunner:
         data_schema = table.read_data().schema
         declared = data_schema.names
         supplied = [c for c in declared if c not in inject]
-        if cols_text:
-            cols = [c.replace("`", "").strip()
-                    for c in _split_top_level(cols_text)]
+        if cols:
             lower = {c.lower(): c for c in declared}
             cols = [lower.get(c.lower(), c) for c in cols]
             unknown = sorted(set(cols) - set(declared))
@@ -1379,9 +1056,7 @@ class MergeSqlRunner:
         # through query(), not spark.sql: an INSERT source may pin a
         # time-travel read (INSERT INTO t SELECT * FROM t VERSION AS
         # OF 3 — the restore-a-version flow)
-        src = self.query(src_sql) if re.match(
-            r"^\s*SELECT\b", src_sql, re.IGNORECASE) \
-            else self.spark.sql(src_sql)
+        src = self.query(src_sql)
         if len(src.columns) != len(cols):
             raise MergeSqlError(
                 f"INSERT source has {len(src.columns)} column(s), "
@@ -1394,7 +1069,8 @@ class MergeSqlRunner:
               for c in declared]
         )
 
-    def _run_insert_overwrite(self, statement: str) -> None:
+    def _run_insert_overwrite(self, ins,
+                              table: ParquetLakeTable) -> None:
         """``INSERT OVERWRITE [TABLE] t [PARTITION (p = lit)] [(cols)]
         VALUES ... | SELECT ...`` — Iceberg's overwrite family, compiled
         onto the keyed merge plan (source rows merge as upserts; rows
@@ -1420,45 +1096,36 @@ class MergeSqlRunner:
         divergence, same as INSERT's: a source key that currently
         lives OUTSIDE the replaced scope is upserted (moved), not
         duplicated."""
-        m = _INSERT_OVERWRITE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported INSERT OVERWRITE; expected INSERT OVERWRITE "
-                "[TABLE] <t> [PARTITION (p = <lit>)] [(c1, ...)] "
-                "VALUES (...) | SELECT ..."
-            )
-        table = self._resolve(m.group("target"))
         pcol = table.partition_col
+        disp = ".".join(ins.target)
 
         def _need_identity(what: str) -> None:
             if pcol is None:
                 raise MergeSqlError(
                     f"{what} needs a partitioned table; "
-                    f"{m.group('target')!r} is unpartitioned")
+                    f"{disp!r} is unpartitioned")
             if table.partition_transform is not None:
                 raise MergeSqlError(
                     f"{what} needs an IDENTITY partition column; "
-                    f"{m.group('target')!r} partitions by a hidden "
+                    f"{disp!r} partitions by a hidden "
                     "transform — overwrite the whole table (static "
                     "mode) or express the replacement with MERGE")
 
         inject: dict = {}
-        if m.group("part"):
+        if ins.partition:
             _need_identity("INSERT OVERWRITE PARTITION")
-            pm = re.match(r"^\s*([\w`]+)\s*=\s*(.+?)\s*$", m.group("part"),
-                          re.DOTALL)
-            if not pm:
+            if len(ins.partition) != 1 or ins.partition[0][1] is None:
                 raise MergeSqlError(
                     "PARTITION clause must be a single "
                     "<partition-col> = <literal>")
-            name = pm.group(1).replace("`", "")
+            name, value = ins.partition[0]
             if name.lower() != pcol.lower():
                 raise MergeSqlError(
                     f"PARTITION column {name!r} is not the table's "
                     f"partition column {pcol!r}")
-            inject[pcol] = self._call_value(pm.group(2))
+            inject[pcol] = value  # Spark's literal value, as a string
         batch = self._conform_insert_source(
-            table, m.group("cols"), m.group("src"), inject=inject)
+            table, ins.cols, ins.query, inject=inject)
         if self.on_duplicate == "error":
             self._reject_batch_duplicates(table, batch)
 
@@ -1519,11 +1186,9 @@ class MergeSqlRunner:
         """``TRUNCATE TABLE t`` — every live row merges as a delete
         (Iceberg's TRUNCATE: data removed, history and schema kept;
         prior snapshots stay time-travelable until expire)."""
-        m = _TRUNCATE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported TRUNCATE; expected TRUNCATE TABLE <t>")
-        table = self._resolve(m.group("target"))
+        tr = self._parse_dml(statement, sql_ast.Truncate, "TRUNCATE",
+                             "TRUNCATE TABLE <t>")
+        table = self._resolve(".".join(tr.target))
         table.merge(self._dml_state(table)
                     .withColumn(OP_COL, F.lit("delete")))
 
@@ -2024,28 +1689,6 @@ class MergeSqlRunner:
 
     # -- SHOW TABLES / DESCRIBE (registry-served catalog surface) --------
 
-    def _run_explain(self, statement: str) -> DataFrame:
-        """``EXPLAIN [EXTENDED|FORMATTED|CODEGEN|COST] <SELECT ...>``
-        — the inner statement runs through the same rewrites
-        :meth:`query` applies (time travel, metadata tables,
-        registered refs, CTE precedence), then Spark explains the
-        REWRITTEN text: the plan a user inspects is the plan the
-        engine executes, in Spark's own output shape (one ``plan``
-        string column)."""
-        m = re.match(
-            r"^\s*EXPLAIN\s+"
-            r"(?P<mode>(?:EXTENDED|FORMATTED|CODEGEN|COST)\s+)?"
-            r"(?P<inner>(?:SELECT|WITH)\b.+?)\s*;?\s*$",
-            statement, re.IGNORECASE | re.DOTALL)
-        if not m:
-            raise MergeSqlError(
-                "unsupported EXPLAIN; expected EXPLAIN [EXTENDED|"
-                "FORMATTED|CODEGEN|COST] SELECT ...")
-        mode = (m.group("mode") or "").strip()
-        return self.spark.sql(
-            f"EXPLAIN {mode + ' ' if mode else ''}"
-            f"{self._rewrite(m.group('inner'))}")
-
     def _run_show(self, statement: str) -> DataFrame:
         """``SHOW TABLES [IN|FROM <db>] [LIKE '<pat>']`` answered from
         THIS RUNNER'S registry — no Spark catalog involved (the
@@ -2414,8 +2057,8 @@ class MergeSqlRunner:
                     # as an "expression" and fail only inside the
                     # initial fold, after state was written (r10
                     # self-review)
-                    # scan with string literals MASKED (the _strip_alias
-                    # odd/even split): a quoted ')' or a quoted
+                    # scan with string literals MASKED (the odd/even
+                    # quote split): a quoted ')' or a quoted
                     # 'min(' is data, not structure — the raw-text
                     # scan falsely rejected SUM(instr(note, ')'))
                     masked = "'".join(
@@ -2752,38 +2395,23 @@ class MergeSqlRunner:
 
     # -- pieces ----------------------------------------------------------
 
-    def _check_on(self, on: str, table: ParquetLakeTable,
+    @staticmethod
+    def _check_on(terms: tuple, table: ParquetLakeTable,
                   talias: str, salias: str) -> None:
-        keys = set()
-        for part in re.split(r"\s+AND\s+", on, flags=re.IGNORECASE):
-            eq = re.match(
-                rf"^\s*(?:{salias}|{talias})\.(\w+)\s*=\s*"
-                rf"(?:{salias}|{talias})\.(\w+)\s*$",
-                part, re.IGNORECASE,
-            )
-            if not eq or eq.group(1).lower() != eq.group(2).lower():
+        """ON must be ``s.k = t.k`` equalities over exactly the table's
+        key columns (MERGE's only sound join for a keyed CDC table)."""
+        keys, aliases = set(), {talias.lower(), salias.lower()}
+        for term in terms:
+            left, right = term.left, term.right
+            if not (left and right and len(left) == len(right) == 2
+                    and {left[0].lower(), right[0].lower()} == aliases
+                    and left[1].lower() == right[1].lower()):
                 raise MergeSqlError(
-                    f"ON must be key equalities s.k = t.k; got {part!r}"
-                )
-            keys.add(eq.group(1))
+                    "ON must be key equalities s.k = t.k; got "
+                    f"{term.text!r}")
+            keys.add(left[1])
         if keys != set(table.key_cols):
             raise MergeSqlError(
                 f"ON keys {sorted(keys)} != table key_cols "
                 f"{sorted(table.key_cols)}"
             )
-
-    @classmethod
-    def _src_condition(cls, cond: str | None, salias: str, talias: str):
-        if cond is None:
-            return None
-        # target-alias scan runs on the quote-stripped text so a URL or
-        # prose literal containing "t." can't false-positive
-        outside = " ".join(cond.split("'")[::2])
-        if re.search(rf"\b{re.escape(talias)}\.", outside, re.IGNORECASE):
-            raise MergeSqlError(
-                "clause conditions may reference source columns only "
-                f"(the engine's latest-wins merge already orders against "
-                f"the target); got {cond!r}"
-            )
-        return F.expr(cls._strip_alias(cond, salias))
-
